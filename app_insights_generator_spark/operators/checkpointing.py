@@ -1,29 +1,28 @@
-"""Shared lineage-pinning helper for the iterative / fan-out operators.
+"""The one way to pin an intermediate: materialize it and truncate its
+lineage.
 
 Every driver-loop fixpoint in this package (connected components, the
-graph algorithms, k-means) truncates lineage once per round so the plan
-stays flat, and every fan-out operator pins shared intermediates so
-Catalyst doesn't recompute the subtree per consuming branch (the measured
-trap in [[catalyst-traps]] / operators/dedup.py's module docstring).
+graph algorithms, k-means) pins once per round so the plan stays flat,
+and every fan-out operator or query pins shared intermediates so Catalyst
+does not recompute the subtree per consuming branch (operators/dedup.py's
+module docstring has the measured case).
 
-``pin`` is the one place that decides HOW: ``checkpoint_dir=None`` uses
-``localCheckpoint(eager=True)`` — fastest, but the pinned blocks live in
-EXECUTOR storage with lineage truncated, so on a real cluster an executor
-loss (including dynamic-allocation decommission) makes them unrecoverable
-and fails the job. Passing a reliable-storage path (HDFS/S3/DBFS)
-switches to ``setCheckpointDir`` + ``.checkpoint(eager=True)``, which
-survives executor loss. Output is identical either way (pinned in
-tests/test_dedup.py and tests/test_graph.py).
+The session checkpoint dir decides the mode; nothing else does:
 
-The session checkpoint dir is set ONCE (ADVICE r08): a repeat call with
-the same root is a no-op, a conflicting path warns and keeps the
-session's existing dir — silently redirecting would re-home every other
-operator's reliable checkpoints mid-session. Per-round checkpoint files
-accumulate under the dir; enable
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (or sweep the
-dir between jobs) on long-lived clusters — documented rather than forced
-because cleanup-on-GC also deletes checkpoints a caller may want to
-re-attach to after driver restart.
+- no dir (the default): ``localCheckpoint`` — fastest, but the blocks live
+  in executor storage, so losing an executor (spot reclaim,
+  dynamic-allocation decommission) fails every later action that reads
+  them;
+- a dir set by ``spark.checkpoint.dir`` at session build or by
+  ``sparkContext.setCheckpointDir``: a reliable ``checkpoint`` to that
+  storage (HDFS/S3/DBFS on a cluster), which survives executor loss at the
+  cost of one write and read.
+
+Output is identical either way (tests/test_dedup.py, test_graph.py,
+test_similarity.py, test_sweep.py run each pinning operator in both
+modes). Checkpoint files accumulate under the dir; set
+``spark.cleaner.referenceTracking.cleanCheckpoints=true`` or sweep the dir
+between jobs on long-lived clusters.
 """
 
 from __future__ import annotations
@@ -31,23 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def pin(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage; see module docstring
-    for the executor-loss trade-off the ``checkpoint_dir`` switch governs."""
-    if checkpoint_dir is None:
+def pin(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and truncate its lineage, reliably when
+    the session has a checkpoint dir (see module docstring)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    current = sc._jsc.sc().getCheckpointDir()
-    if not current.isDefined():
-        sc.setCheckpointDir(checkpoint_dir)
-    elif checkpoint_dir.rstrip("/") not in current.get():
-        # setCheckpointDir stores <dir>/<app-uuid>; a different root means
-        # a genuine conflict — keep the session's dir, warn the caller.
-        import warnings
-
-        warnings.warn(
-            f"session checkpoint dir already {current.get()!r}; keeping it "
-            f"(requested {checkpoint_dir!r})",
-            stacklevel=3,
-        )
     return df.checkpoint(eager=True)

@@ -25,33 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from app_insights_generator_spark.operators.checkpointing import pin as _shared_pin
+from app_insights_generator_spark.operators.checkpointing import pin
 from app_insights_generator_spark.operators.text import (
     normalized_text,
     shingles_from_tokens,
     tokens,
 )
-
-
-def _pin(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Materialize and pin a (small) intermediate so upstream caches can be
-    released and fan-out consumers reuse one computation.
-
-    ``checkpoint_dir=None`` uses ``localCheckpoint(eager=True)`` — fastest,
-    but the pinned blocks live in EXECUTOR storage with lineage truncated,
-    so on a real cluster an executor loss (including dynamic-allocation
-    decommission) makes them unrecoverable and fails the job. Passing a
-    reliable-storage path (HDFS/S3/DBFS) switches to
-    ``setCheckpointDir`` + ``.checkpoint(eager=True)``, which survives
-    executor loss — the same reliable-checkpoint story the sweep operators
-    use (operators/sweep.py ``checkpoint_dir``; SCALE.md). Output is
-    identical either way (pinned in tests/test_dedup.py).
-
-    Since round 9 this delegates to the shared
-    :func:`operators.checkpointing.pin` (the graph fixpoints and k-means
-    take the same ``checkpoint_dir`` now); the set-dir-once + warn-on-
-    conflict + cleanup story lives in that module's docstring."""
-    return _shared_pin(df, checkpoint_dir)
 
 
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
@@ -117,9 +96,7 @@ def minhash_signatures(
     return _signatures_from_sets(_shingle_sets(df, id_col, text_col, shingle_n), num_hashes)
 
 
-def _candidates_from_sets(
-    sh: DataFrame, num_hashes: int, bands: int, checkpoint_dir: str | None = None
-) -> DataFrame:
+def _candidates_from_sets(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     rows = num_hashes // bands
     sig = _signatures_from_sets(sh, num_hashes)
     # Pairs come from an equi self-join over a PINNED narrow banded table
@@ -141,7 +118,7 @@ def _candidates_from_sets(
     # 2.5-2.9s; synthetic hot bucket (2,000 identical docs, ~2.0M pairs):
     # 26.7s -> 12.2s, pair sets identical in both cases.
     # NULL-id guard replicates the old join's a._id < b._id semantics.
-    banded = _pin(
+    banded = pin(
         sig.select(
             "_id",
             F.explode(
@@ -161,8 +138,7 @@ def _candidates_from_sets(
             ).alias("bk"),
         )
         .select("_id", "bk.band", "bk.bhash")
-        .filter(F.col("_id").isNotNull()),
-        checkpoint_dir,
+        .filter(F.col("_id").isNotNull())
     )
     a = banded.select(F.col("_id").alias("id_a"), "band", "bhash")
     b = banded.select(F.col("_id").alias("id_b"), "band", "bhash")
@@ -239,7 +215,6 @@ def near_dedup_minhash(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact-Jaccard verification.
 
@@ -247,16 +222,14 @@ def near_dedup_minhash(
     the MinHash signatures and BOTH sides of the verify self-join — the
     naive composition tokenized+shingled the corpus three times (the
     costliest step: regex splits over every document). The (tiny) verified
-    pair list is pinned (see :func:`_pin`) so the cache can be released
-    before returning; at 100 TB the persist spills to disk, which still
-    beats two extra full text-processing passes. Pass ``checkpoint_dir``
-    on a cluster: the default localCheckpoint pin cannot survive executor
-    loss."""
+    pair list is pinned (operators/checkpointing.py) so the cache can be
+    released before returning; at 100 TB the persist spills to disk, which
+    still beats two extra full text-processing passes."""
     sh = _shingle_sets(df, id_col, text_col, shingle_n).persist()
     pairs = _jaccard_from_sets(
-        sh, _candidates_from_sets(sh, num_hashes, bands, checkpoint_dir), threshold
+        sh, _candidates_from_sets(sh, num_hashes, bands), threshold
     )
-    pinned = _pin(pairs, checkpoint_dir)
+    pinned = pin(pairs)
     sh.unpersist()
     return pinned
 
@@ -332,9 +305,8 @@ def hamming_band_pairs(
     # pair inside the flattened array (ADVICE r12, medium).
     # NULL guard replicates equi-join semantics exactly: a NULL cval/_id
     # never matched in the old join.
-    pinned = _pin(
-        chunked.filter(F.col("cval").isNotNull() & F.col("_id").isNotNull()),
-        None,
+    pinned = pin(
+        chunked.filter(F.col("cval").isNotNull() & F.col("_id").isNotNull())
     )
     a = pinned.select(
         F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"), "chunk", "cval"
@@ -366,7 +338,6 @@ def connected_components(
     ids: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over a pair graph
     by iterative hash-min label propagation. Output: [<id_col>, component]
@@ -381,25 +352,23 @@ def connected_components(
       diameters are tiny);
     - a checkpoint per round truncates the lineage so the plan does not
       grow exponentially with iterations (the classic iterative-Spark
-      failure mode); ``checkpoint_dir=None`` uses localCheckpoint (see
-      :func:`_pin` for the executor-loss caveat), a reliable-storage path
-      survives executor loss — and matters MORE here than for the one-shot
-      pins, since a lost round-k block kills all later rounds;
+      failure mode); a reliable session checkpoint dir matters MORE here
+      than for the one-shot pins, since a lost round-k block kills all
+      later rounds (operators/checkpointing.py);
     - convergence check is a count of changed labels — one scalar to the
       driver per round, never the labels themselves, collected by an
       ``observe()`` metric DURING the pin job (round 13): the old separate
       ``agg(sum(_changed))`` action was one extra job per iteration — pure
       per-job fixed cost locally and one extra pinned-table scan per round
-      at scale. Verified on both pin paths (localCheckpoint and reliable
-      checkpoint) that the metric fires from the eager pin action.
+      at scale. Verified in both pin modes that the metric fires from the
+      eager pin action.
     """
     from pyspark.sql import Observation
 
-    sym = _pin(
+    sym = pin(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     labels = ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("component"))
     changed = 0
@@ -422,9 +391,7 @@ def connected_components(
             )
         )
         obs = Observation()
-        new_labels = _pin(
-            new_labels.observe(obs, F.sum("_changed").alias("n")), checkpoint_dir
-        )
+        new_labels = pin(new_labels.observe(obs, F.sum("_changed").alias("n")))
         changed = obs.get["n"] or 0
         labels = new_labels.drop("_changed")
         if changed == 0:
@@ -526,9 +493,8 @@ def incremental_near_dedup(
     target AND the verify shingle lookup — without the pin the costliest
     per-batch work (tokenize/shingle/64-hash-min) ran up to three times."""
     if batch_index is None:
-        batch_index = _pin(
-            build_band_index(new_df, id_col, text_col, shingle_n, num_hashes, bands),
-            None,
+        batch_index = pin(
+            build_band_index(new_df, id_col, text_col, shingle_n, num_hashes, bands)
         )
     full = index.unionByName(batch_index)
     probe = batch_index.select("band", "bhash", F.col("_id").alias("_bid"))
@@ -687,7 +653,6 @@ def jaccard_join_prefix_filter(
     shingle_n: int = 3,
     threshold: float = 0.5,
     positional: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT Jaccard similarity self-join >= threshold via prefix
     filtering (the AllPairs/PPJoin family, Bayardo et al. 2007) — the
@@ -788,7 +753,7 @@ def jaccard_join_prefix_filter(
         .distinct()
     )
     pairs = _jaccard_from_sets(sh, cand, threshold)
-    pinned = _pin(pairs, checkpoint_dir)
+    pinned = pin(pairs)
     pos_rows.unpersist()
     sh.unpersist()
     return pinned
@@ -800,18 +765,13 @@ def winnowing_fingerprint_rows(
     text_col: str,
     k: int = 4,
     w: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The selected winnowing fingerprint SET as rows: one distinct
-    (doc_id, wmin) per document fingerprint, pinned via :func:`_pin`
-    (the explode+window subtree always fans out downstream; pass
-    ``checkpoint_dir`` on a cluster — the default localCheckpoint pin
-    cannot survive executor loss). Shared core of :func:`winnowing_stats`
+    (doc_id, wmin) per document fingerprint, pinned (the explode+window
+    subtree always fans out downstream). Shared core of :func:`winnowing_stats`
     and the cross-split contamination audit — same grams, window minima,
     and clamped-window semantics."""
-    return _pin(
-        _winnowing_selected_rows(df, id_col, text_col, k, w), checkpoint_dir
-    )
+    return pin(_winnowing_selected_rows(df, id_col, text_col, k, w))
 
 
 def _winnowing_selected_rows(
@@ -859,7 +819,6 @@ def winnowing_stats(
     text_col: str,
     k: int = 4,
     w: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every k-token gram, slide a
@@ -912,11 +871,10 @@ def winnowing_stats(
     # table. The explode+window subtree still runs ONCE, inside the pin's
     # lineage (zero Window nodes in the final plan — guarded in
     # test_plans).
-    d = _pin(
+    d = pin(
         _winnowing_selected_rows(df, id_col, text_col, k, w)
         .groupBy("doc_id", "wmin")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.any_value("m").alias("m")),
-        checkpoint_dir,
+        .agg(F.count(F.lit(1)).alias("cnt"), F.any_value("m").alias("m"))
     )
     stats = d.groupBy("doc_id").agg(
         F.any_value(F.col("m")).cast("long").alias("n_grams"),
@@ -966,7 +924,6 @@ def containment_join_prefix_filter(
     shingle_n: int = 3,
     threshold_bp: int = 6000,
     positional: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT directed CONTAINMENT self-join: emit (id_a, id_b) where
     C(A->B) = |A∩B| / |A| >= threshold — A's shingles mostly appear in
@@ -1061,7 +1018,7 @@ def containment_join_prefix_filter(
             ),
         )
     )
-    pinned = _pin(verified, checkpoint_dir)
+    pinned = pin(verified)
     pos_rows.unpersist()
     sh.unpersist()
     return pinned

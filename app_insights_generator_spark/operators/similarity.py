@@ -789,7 +789,6 @@ def kmeans_parallel_init(
     rounds: int = 2,
     scale: int = 1_000_000,
     offset: int = 1_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-means|| scalable seeding (Bahmani et al., VLDB 2012) ->
     [seed_rank, vid, weight, phi0, phi_sel].
@@ -820,21 +819,13 @@ def kmeans_parallel_init(
 
     Reference parity: no counterpart; cited file is public Spark's own
     MLlib initializer concept (initMode="k-means||"), re-expressed
-    relationally.
-
-    ``checkpoint_dir``: per-round pins default to localCheckpoint
-    (executor-storage, lost on executor loss); pass a reliable-storage
-    path on a real cluster — see operators/checkpointing.py."""
-
-    def _ck(d: DataFrame) -> DataFrame:
-        return pin(d, checkpoint_dir)
-
-    e = quantized_long_form(embs, id_col, vec_col, scale, offset).transform(_ck)
+    relationally."""
+    e = quantized_long_form(embs, id_col, vec_col, scale, offset).transform(pin)
     first = e.groupBy().agg(F.min("vid").alias("vid"))
     centers = (
         e.join(F.broadcast(first), "vid")
         .select(F.col("vid").alias("cid"), "d", "v")
-        .transform(_ck)
+        .transform(pin)
     )
     phi0 = None
     two48 = 281474976710656.0
@@ -870,7 +861,7 @@ def kmeans_parallel_init(
         )
         centers = centers.unionByName(
             e.join(sel, "vid").select(F.col("vid").alias("cid"), "d", "v")
-        ).transform(_ck)
+        ).transform(pin)
     assign = assign_to_centroids(e, centers)
     w = Window.orderBy(F.desc("weight"), "cid")
     seeds = (
@@ -905,7 +896,6 @@ def kmeans_fixed_point(
     scale: int = 1_000_000,
     offset: int = 1_000_000,
     checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed Lloyd's k-means in INTEGER fixed-point ->
     (assignments [vid, cid, dist], centroids [cid, d, v]).
@@ -926,10 +916,8 @@ def kmeans_fixed_point(
     Init: the k lowest-id vectors (deterministic, seedless). Empty
     clusters drop out of the centroid table (both engines identically).
     ``checkpoint=False`` skips the per-round lineage pin so plan guards
-    can inspect the full iteration DAG; with ``checkpoint=True`` the pin
-    defaults to localCheckpoint (executor storage — unrecoverable on
-    executor loss) and ``checkpoint_dir`` switches it to a reliable-
-    storage ``.checkpoint`` (operators/checkpointing.py).
+    can inspect the full iteration DAG (operators/checkpointing.py has
+    the pin's two modes).
 
     Scale: per iteration one broadcast join producing n*k*dim partial
     products -> (vid,cid) partial-agg groupBy -> n*k rows -> window by
@@ -942,7 +930,7 @@ def kmeans_fixed_point(
     scale (the gate keeps inertia per-cluster at ~1e17).
     """
     e = quantized_long_form(embs, id_col, vec_col, scale, offset)
-    e = pin(e, checkpoint_dir) if checkpoint else e
+    e = pin(e) if checkpoint else e
 
     init = (
         e.select("vid")
@@ -956,7 +944,7 @@ def kmeans_fixed_point(
     )
     cent = e.join(init, "vid").select("cid", "d", "v")
     if checkpoint:
-        cent = pin(cent, checkpoint_dir)
+        cent = pin(cent)
 
     assign = None
     for _ in range(n_iter):
@@ -984,7 +972,7 @@ def kmeans_fixed_point(
             .agg(F.expr("CAST(sum(v) DIV count(1) AS LONG)").alias("v"))
         )
         if checkpoint:
-            cent = pin(cent, checkpoint_dir)
+            cent = pin(cent)
     return assign, cent
 
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -20,16 +21,20 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-@pytest.fixture(scope="session")
-def ckpt_root(tmp_path_factory) -> str:
-    """ONE reliable-checkpoint root shared by every checkpoint_dir-using
-    test (VERDICT r09 item 5): the session checkpoint dir is set once by
-    design (warn-don't-rehome, operators/checkpointing.py pin), so
-    per-test tmp_path roots made later tests trip the conflict warning
-    incidentally — test isolation then depended on the warn path. With a
-    single session root, pin's repeat call is the designed silent no-op;
-    the warn path is exercised solely by the dedicated conflict test
-    (test_pin_conflicting_checkpoint_dir_warns_and_keeps_session_dir),
-    and pyproject.toml escalates any OTHER occurrence of that warning to
-    an error."""
-    return str(tmp_path_factory.mktemp("session_ckpt"))
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """``with reliable_checkpoints() as ckpt:`` gives the session a
+    checkpoint dir for the block, so every pin inside it is a reliable
+    ``checkpoint`` (operators/checkpointing.py), then restores "no dir" so
+    the mode cannot leak into later tests."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def mode():
+        sc.setCheckpointDir(str(tmp_path))
+        try:
+            yield str(tmp_path)
+        finally:
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+    return mode

@@ -2,6 +2,8 @@
 ground truth: exact dedup, MinHash-LSH recall vs brute-force Jaccard,
 SimHash distances."""
 
+import glob
+import os
 import random
 
 import pytest
@@ -481,60 +483,31 @@ def test_cross_split_contamination_conservation(spark, sf_dir):
         assert r.leak_bp == r.n_leaked * 10000 // r.n_fp
 
 
-def test_reliable_checkpoint_mode_output_equality(spark, ckpt_root, corpus):
-    """checkpoint_dir plumbing (VERDICT r07 item #5): the reliable-storage
-    checkpoint mode must produce exactly the rows of the default
-    localCheckpoint mode for every operator that pins an intermediate.
-    The default mode's pinned blocks live in executor storage and cannot
-    survive executor loss on a cluster; checkpoint_dir is the dynamic-
-    allocation-safe path."""
-    ckpt = ckpt_root  # shared session root: see conftest.ckpt_root
+def test_reliable_checkpoint_mode_output_equality(spark, reliable_checkpoints, corpus):
+    """Every dedup operator that pins an intermediate returns the same rows
+    with reliable pins (session checkpoint dir set) as with the default
+    localCheckpoint pins, including simhash_pairs' hamming-band pin (fed
+    exact copies so it has pairs to find)."""
+    copies = corpus.unionByName(corpus.withColumn("doc_id", F.col("doc_id") + 1000))
 
-    local = D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5)
-    reliable = D.near_dedup_minhash(
-        corpus, "doc_id", "text", threshold=0.5, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
+    def run():
+        pairs = D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5)
+        outs = [
+            pairs,
+            D.winnowing_fingerprint_rows(corpus, "doc_id", "text", k=4, w=4),
+            D.jaccard_join_prefix_filter(corpus, "doc_id", "text", threshold=0.5),
+            D.containment_join_prefix_filter(corpus, "doc_id", "text", threshold_bp=6000),
+            D.connected_components(pairs, corpus.select("doc_id")),
+            D.simhash_pairs(copies, "doc_id", "text"),
+        ]
+        return [sorted(map(tuple, o.collect())) for o in outs]
 
-    local = D.winnowing_fingerprint_rows(corpus, "doc_id", "text", k=4, w=4)
-    reliable = D.winnowing_fingerprint_rows(
-        corpus, "doc_id", "text", k=4, w=4, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.doc_id, r.i, r.wmin)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    local = D.jaccard_join_prefix_filter(corpus, "doc_id", "text", threshold=0.5)
-    reliable = D.jaccard_join_prefix_filter(
-        corpus, "doc_id", "text", threshold=0.5, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    local = D.containment_join_prefix_filter(
-        corpus, "doc_id", "text", threshold_bp=6000
-    )
-    reliable = D.containment_join_prefix_filter(
-        corpus, "doc_id", "text", threshold_bp=6000, checkpoint_dir=ckpt
-    )
-    key = lambda r: (r.id_a, r.id_b, r.containment_bp)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    local = D.connected_components(
-        D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5),
-        corpus.select("doc_id"),
-    )
-    reliable = D.connected_components(
-        D.near_dedup_minhash(corpus, "doc_id", "text", threshold=0.5),
-        corpus.select("doc_id"),
-        checkpoint_dir=ckpt,
-    )
-    key = lambda r: (r.doc_id, r.component)  # noqa: E731
-    assert sorted(map(key, local.collect())) == sorted(map(key, reliable.collect()))
-
-    import os
-
-    assert os.path.isdir(ckpt) and os.listdir(ckpt), "reliable dir unused"
+    local = run()
+    with reliable_checkpoints() as ckpt:
+        reliable = run()
+    assert all(local), "an operator returned no rows"
+    assert local == reliable
+    assert glob.glob(os.path.join(ckpt, "*", "rdd-*")), "reliable dir unused"
 
 
 def test_dedup_rate_by_source_conservation(spark, sf_dir):

@@ -1,6 +1,9 @@
 """pagerank (operators/graph.py): integer fixed-point recurrence checked
 against a pure-python dict oracle on hand-built graphs."""
 
+import glob
+import os
+
 from pyspark.sql import functions as F
 
 from app_insights_generator_spark.operators.graph import pagerank
@@ -317,18 +320,15 @@ def test_clustering_coefficient_hand_graph(spark):
     assert lcc == {"a": 3333, "b": 10000, "c": 10000, "d": 0}
 
 
-def test_graph_checkpoint_dir_output_equality(spark, ckpt_root):
-    """checkpoint_dir plumbing (VERDICT r08 item #5, mirroring the dedup
-    family's r07 fix): every iterative graph fixpoint must produce exactly
-    the localCheckpoint-mode rows when pinning to reliable storage — the
-    executor-loss-safe path on a real cluster. One representative per
-    fixpoint shape: mass propagation (pagerank, personalized), frontier
-    expansion (bfs), relaxation (sssp), peeling (kcore), label convergence
-    (lpa, star-CC), mutual recursion (hits), and the join-based
-    triangle counter's pinned intermediates."""
+def test_graph_checkpoint_dir_output_equality(spark, reliable_checkpoints):
+    """Every iterative graph fixpoint returns the same rows with reliable
+    pins (session checkpoint dir set) as with localCheckpoint pins. One
+    representative per fixpoint shape: mass propagation (pagerank,
+    personalized), frontier expansion (bfs), relaxation (sssp), peeling
+    (kcore), label convergence (lpa, star-CC), mutual recursion (hits),
+    and the join-based triangle counter's pinned intermediates."""
     from app_insights_generator_spark.operators import graph as G
 
-    ckpt = ckpt_root  # shared session root: see conftest.ckpt_root
     edges = [
         ("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"),
         ("d", "a"), ("d", "b"), ("d", "c"), ("a", "c"),
@@ -341,29 +341,22 @@ def test_graph_checkpoint_dir_output_equality(spark, ckpt_root):
     ids = spark.createDataFrame([(0,), (1,), (2,), (3,)], ["doc_id"])
     iedges = spark.createDataFrame([(0, 1), (1, 2)], ["src", "dst"])
 
-    def rows(d):
-        return sorted(map(tuple, d.collect()))
+    def run():
+        outs = [
+            G.pagerank(df),
+            G.personalized_pagerank(df),
+            G.bfs_depths(df, srcs),
+            G.sssp(wdf, srcs),
+            G.kcore_peel(df, k=2, rounds=3),
+            G.label_propagation(df),
+            G.triangle_counts(df),
+            G.hits(df),
+            G.connected_components_star(iedges, ids, "doc_id"),
+        ]
+        return [sorted(map(tuple, o.collect())) for o in outs]
 
-    assert rows(G.pagerank(df)) == rows(G.pagerank(df, checkpoint_dir=ckpt))
-    assert rows(G.personalized_pagerank(df)) == rows(
-        G.personalized_pagerank(df, checkpoint_dir=ckpt)
-    )
-    assert rows(G.bfs_depths(df, srcs)) == rows(
-        G.bfs_depths(df, srcs, checkpoint_dir=ckpt)
-    )
-    assert rows(G.sssp(wdf, srcs)) == rows(
-        G.sssp(wdf, srcs, checkpoint_dir=ckpt)
-    )
-    assert rows(G.kcore_peel(df, k=2, rounds=3)) == rows(
-        G.kcore_peel(df, k=2, rounds=3, checkpoint_dir=ckpt)
-    )
-    assert rows(G.label_propagation(df)) == rows(
-        G.label_propagation(df, checkpoint_dir=ckpt)
-    )
-    assert rows(G.triangle_counts(df)) == rows(
-        G.triangle_counts(df, checkpoint_dir=ckpt)
-    )
-    assert rows(G.hits(df)) == rows(G.hits(df, checkpoint_dir=ckpt))
-    assert rows(G.connected_components_star(iedges, ids, "doc_id")) == rows(
-        G.connected_components_star(iedges, ids, "doc_id", checkpoint_dir=ckpt)
-    )
+    local = run()
+    with reliable_checkpoints() as ckpt:
+        reliable = run()
+    assert local == reliable
+    assert glob.glob(os.path.join(ckpt, "*", "rdd-*")), "reliable dir unused"

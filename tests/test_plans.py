@@ -895,3 +895,34 @@ def test_round12_compaction_gate_no_cartesian_no_python(spark, sf_dir):
         assert (
             "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
         ), name
+
+
+def test_every_pin_goes_through_checkpointing_pin():
+    """One way to pin: no raw ``localCheckpoint``/``checkpoint`` call in the
+    package outside operators/checkpointing.py, and no operator takes a
+    ``checkpoint_dir`` (the session checkpoint dir decides the mode)."""
+    import ast
+    import pathlib
+
+    import app_insights_generator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    raw, params = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        text = path.read_text()
+        if rel != "operators/checkpointing.py":
+            raw += [
+                f"{rel}:{i}"
+                for i, line in enumerate(text.splitlines(), 1)
+                if "localCheckpoint(" in line or ".checkpoint(" in line
+            ]
+        if rel.startswith("operators/"):
+            for node in ast.walk(ast.parse(text)):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                    a = node.args
+                    names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                    if "checkpoint_dir" in names:
+                        params.append(f"{rel}:{node.lineno}")
+    assert not raw, f"pin through operators.checkpointing.pin instead: {raw}"
+    assert not params, f"checkpoint_dir parameters: {params}"

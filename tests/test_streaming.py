@@ -119,33 +119,6 @@ def test_stateful_running_totals(spark, sf_dir, events_stream):
     assert final == batch
 
 
-def test_stateful_v2_type_stats(spark, sf_dir, events_stream):
-    """transformWithStateInPandas: final per-user update must equal the
-    batch groupBy (distinct types + totals). Skips where protobuf (the
-    state-serialization dependency of the new API) is absent — the batch
-    twin's oracle row still covers the semantics."""
-    from app_insights_generator_spark.streaming.stateful_v2 import (
-        PROTOBUF_AVAILABLE,
-        user_type_stats,
-    )
-
-    if not PROTOBUF_AVAILABLE:
-        pytest.skip("transformWithStateInPandas needs protobuf; not in sandbox")
-
-    got = run_to_memory(
-        user_type_stats(events_stream), "t_state_v2", output_mode="update"
-    )
-    final: dict = {}
-    for r in got.collect():
-        if r.user_id not in final or r.n_events > final[r.user_id][1]:
-            final[r.user_id] = (r.n_types, r.n_events, r.total_value)
-    batch = {
-        r.user_id: (r.n_types, r.n_events, r.total_value)
-        for r in QUERIES["stateful_type_stats_batch_twin_events"](spark, sf_dir).collect()
-    }
-    assert final == batch
-
-
 def test_late_data_dropped_after_watermark(spark):
     """Late-data semantics, proven not assumed: a row arriving BELOW the
     restored watermark must not reopen a window that append mode already

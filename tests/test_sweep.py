@@ -2,6 +2,8 @@
 (SURVEY.md §7 M3), on real driver testdata (orders @ sf0.001), across
 cube / batched-grouping-sets / pre-aggregated variants."""
 
+import glob
+import os
 from collections import Counter
 
 import pytest
@@ -122,28 +124,26 @@ def test_apriori_prunes_with_biting_threshold(spark, orders_prepared):
     assert native == apriori
 
 
-def test_reliable_checkpoint_dir_matches_default(spark, orders_prepared, ckpt_root):
-    # checkpoint_dir switches the result pin from executor-local
-    # localCheckpoint to a reliable-storage checkpoint (the cluster
-    # deployment mode); output must be identical either way. Both sweeps
-    # use small chunk sizes so the pin path actually executes.
+def test_reliable_checkpoint_dir_matches_default(
+    spark, orders_prepared, reliable_checkpoints
+):
+    # With a session checkpoint dir the result pin is a reliable checkpoint
+    # (the cluster deployment mode) instead of localCheckpoint; output must
+    # be identical either way. The grouping-sets sweep uses a small chunk
+    # size so its pin path actually executes.
     from app_insights_generator_spark.operators.sweep import sweep_apriori
 
-    default = _insights_multiset(
-        sweep_grouping_sets(orders_prepared, ORDERS_CFG, expand_batch_size=3)
-    )
-    reliable = _insights_multiset(
-        sweep_grouping_sets(
-            orders_prepared,
-            ORDERS_CFG,
-            expand_batch_size=3,
-            checkpoint_dir=ckpt_root,
-        )
-    )
+    def run():
+        return [
+            _insights_multiset(
+                sweep_grouping_sets(orders_prepared, ORDERS_CFG, expand_batch_size=3)
+            ),
+            _insights_multiset(sweep_apriori(orders_prepared, ORDERS_CFG)),
+        ]
+
+    default = run()
+    with reliable_checkpoints() as ckpt:
+        reliable = run()
+    assert default[0] == default[1]
     assert default == reliable
-    apriori_reliable = _insights_multiset(
-        sweep_apriori(
-            orders_prepared, ORDERS_CFG, checkpoint_dir=ckpt_root
-        )
-    )
-    assert default == apriori_reliable
+    assert glob.glob(os.path.join(ckpt, "*", "rdd-*")), "reliable dir unused"
