@@ -176,6 +176,14 @@ def sweep_grouping_sets(
 ) -> DataFrame:
     """Native mode -> DataFrame[Insights], semantics identical to sweep_loop.
 
+    ``total_count``: the threshold denominator N (support floor
+    ``int(threshold_percent/100 * N)``). Left None, N is the input's row
+    count, derived from the pre-aggregate (sum of per-tuple counts). On
+    the default single-cube path that is a scalar subquery inside the
+    plan, so the returned DataFrame is lazy and runs its one plan when
+    the caller acts on it; the chunked paths persist the pre-aggregate,
+    count it, and return a pinned result.
+
     ``expand_batch_size``: max grouping sets per aggregation job; None means
     a single ``cube`` (fan-out 2^n) when no combo-size cap applies, and
     ``"auto"`` picks the volume-adaptive chunk size (_adaptive_chunk_size).
@@ -199,35 +207,46 @@ def sweep_grouping_sets(
         base = _preaggregate(df, cols, display) if preaggregate else df
     count_expr = F.sum("_pre_count") if preaggregate else F.count(F.lit(1))
 
-    # Threshold denominator: when no count is supplied, derive it from the
-    # persisted pre-aggregation (sum of per-tuple counts == raw row count)
-    # instead of a separate df.count() — that second action was a SECOND
-    # full pass over the raw input, the thing pre-aggregation exists to
-    # avoid. At 100 TB this halves the scan volume of the whole sweep.
+    max_size = cfg.max_combo_size or len(cols)
+    single_cube = expand_batch_size is None and max_size >= len(cols)
+
+    # Support threshold t = int(pct/100 * N), N = the input's row count.
+    # Single cube over the pre-aggregate, no N given: t is a scalar
+    # subquery summing `_pre_count`, the same IEEE double product as
+    # threshold_count truncated to long as int() does, so the sweep is one
+    # lazy plan with no action, persist or pin. AQE feeds the subquery from
+    # the pre-aggregate's own shuffle (ReusedExchange): the input is
+    # scanned once. An empty input sums to NULL, coalesced to N = 0.
+    # Otherwise t is a literal: the caller's N; on the chunked paths the
+    # sum over the pre-aggregate they persist anyway (every chunk job
+    # scans it); without pre-aggregation one df.count().
     counted_from_base = False
-    if total_count is None:
-        if preaggregate:
-            base = base.persist()
-            counted_from_base = True
-            total_count = (
-                base.agg(F.sum("_pre_count").alias("n")).collect()[0]["n"] or 0
-            )
-        else:
-            total_count = df.count()
-    t = threshold_count(cfg, total_count)
+    if total_count is None and preaggregate and single_cube and _base is None:
+        n = F.coalesce(F.sum("_pre_count"), F.lit(0)).cast("double")
+        t = base.select((F.lit(cfg.threshold_percent / 100.0) * n).cast("long")).scalar()
+    else:
+        if total_count is None:
+            if preaggregate:
+                base = base.persist()
+                counted_from_base = True
+                total_count = (
+                    base.agg(F.sum("_pre_count").alias("n")).collect()[0]["n"] or 0
+                )
+            else:
+                total_count = df.count()
+        t = F.lit(threshold_count(cfg, total_count))
 
     aggs = [F.min(qcol(v)).alias(v) for v in display]
     aggs.append(count_expr.cast("long").alias("count"))
     aggs.extend(F.grouping(qcol(c)).alias(f"_g{i}") for i, c in enumerate(cols))
 
-    max_size = cfg.max_combo_size or len(cols)
     key_cols = [qcol(c) for c in cols]
 
     # A caller-provided _base arrives persisted: pin the result and release
     # the cache on the way out exactly as for a locally-persisted base.
     persisted_base = counted_from_base or _base is not None
     interp_small = False
-    if expand_batch_size is None and max_size >= len(cols):
+    if single_cube:
         grouped = [base.cube(*key_cols).agg(*aggs)]
     else:
         # With a combo-size cap, enumerate ONLY the wanted sets: a full cube
@@ -286,7 +305,7 @@ def sweep_grouping_sets(
             term = F.when(active[c], 1).otherwise(0)
             n_active = term if n_active is None else (n_active + term)
         keep = keep & (n_active >= 1) & (n_active <= max_size)
-        keep = keep & (F.col("count") >= F.lit(t))
+        keep = keep & (F.col("count") >= t)
 
         # Field order == reference: non-ID grouping cols in cols order,
         # then display cols, then the bare count (main.py:292-312).

@@ -1,18 +1,24 @@
 """End-to-end insights pipeline (reference extract_data, main.py:363-404).
 
-Flow parity: read CSV -> cast -> range-filter -> bucket -> repartition ->
-cache -> combination sweep -> write -> optional two-phase compaction merge
-(main.py:391-393) -> unpersist. Differences from the reference, on purpose:
+Two flows over the same read -> cast -> range-filter -> bucket prefix:
 
-- returns the FINAL insights DataFrame, not the raw input (the reference
-  returns the pre-transform frame, main.py:404 — a vestigial surface);
-- ``mode="native"`` runs the sweep as one grouping-sets aggregation and a
-  single parallel write — no append batches, no compaction, no
-  ``coalesce(1)`` unless ``single_file`` is requested (the reference's
-  per-batch coalesce(1), main.py:358, is a single-task bottleneck at scale);
-- ``mode="loop"`` keeps the faithful shape: ≤128-combination batches
-  appended to ``<out>_partitioned`` with per-file headers, then re-read and
-  merged into the final CSV exactly like the reference.
+- ``mode="native"``: read -> prepare -> ONE cube plan -> write. The sweep
+  is a single lazy grouping-sets aggregation whose support threshold is a
+  scalar subquery over its own pre-aggregate (operators/sweep.py), so the
+  CSV is parsed once after schema inference, nothing is cached or
+  counted, and the parallel write is the plan's only job. No append
+  batches, no compaction, no ``coalesce(1)`` unless ``single_file`` is
+  requested (the reference's per-batch coalesce(1), main.py:358, is a
+  single-task bottleneck at scale).
+- ``mode="loop"`` keeps the faithful shape: repartition -> cache -> count
+  (one shared threshold denominator, main.py:344) -> <=128-combination
+  batches appended to ``<out>_partitioned`` with per-file headers, then
+  re-read and merged into the final CSV exactly like the reference
+  (main.py:391-393) -> unpersist.
+
+Both return the FINAL insights DataFrame as a lazy re-read of the written
+CSV, not the raw input (the reference returns the pre-transform frame,
+main.py:404 — a vestigial surface).
 """
 
 from __future__ import annotations
@@ -44,34 +50,48 @@ def extract_data(
     single_file: bool = False,
 ) -> DataFrame:
     """Run the full reference pipeline over a CSV; returns the insights
-    DataFrame after writing ``output_path``."""
+    DataFrame after writing ``output_path``.
+
+    ``num_partitions`` repartitions the prepared rows in loop mode only
+    (reference main.py:388), where the cache that follows is scanned once
+    per batch. Native mode ignores it: nothing reads the raw rows before
+    the pre-aggregate's own shuffle, so a repartition there would be a
+    full extra shuffle that buys nothing.
+    """
+    if mode not in ("native", "loop"):
+        raise ValueError(f"unknown mode {mode!r} (want 'native' or 'loop')")
     raw = read_csv(spark, csv_path, header=header, infer_schema=infer_schema, schema=schema)
     bucketed = prepare(raw, cfg)
+    if mode == "native":
+        # One lazy plan: the write is its only action, threshold included.
+        insights = sweep_grouping_sets(bucketed, cfg)
+        write_csv(insights, output_path, header=True, mode="overwrite",
+                  single_file=single_file)
+        return _read_insights(spark, output_path)
+
     if num_partitions:
         # reference main.py:388; at scale prefer AQE coalescing instead
         bucketed = bucketed.repartition(num_partitions)
     bucketed = bucketed.cache()
     try:
         total = bucketed.count()  # one shared threshold denominator (main.py:344)
-        if mode == "native":
-            insights = sweep_grouping_sets(bucketed, cfg, total_count=total)
-            write_csv(insights, output_path, header=True, mode="overwrite",
+        part_dir = f"{output_path}_partitioned"
+        batches = sweep_loop(bucketed, cfg, total_count=total, batch_size=batch_size)
+        for batch in batches:
+            # append + per-file header, reconciled on re-read (main.py:358, 392)
+            write_csv(batch, part_dir, header=True, mode="append",
                       single_file=single_file)
-            return spark.read.option("header", True).csv(output_path)
-        if mode == "loop":
-            part_dir = f"{output_path}_partitioned"
-            batches = sweep_loop(bucketed, cfg, total_count=total, batch_size=batch_size)
-            for batch in batches:
-                # append + per-file header, reconciled on re-read (main.py:358, 392)
-                write_csv(batch, part_dir, header=True, mode="append",
-                          single_file=single_file)
-            merged = spark.read.option("header", True).csv(part_dir)
-            write_csv(merged, output_path, header=True, mode="overwrite",
-                      single_file=single_file)
-            return spark.read.option("header", True).csv(output_path)
-        raise ValueError(f"unknown mode {mode!r} (want 'native' or 'loop')")
+        write_csv(_read_insights(spark, part_dir), output_path, header=True,
+                  mode="overwrite", single_file=single_file)
+        return _read_insights(spark, output_path)
     finally:
         bucketed.unpersist()
+
+
+def _read_insights(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy re-read of an insights CSV. The declared schema spares the
+    header-sniffing job Spark runs for a schemaless CSV read."""
+    return spark.read.schema("Insights STRING").option("header", True).csv(path)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -21,7 +21,12 @@ def _phys_tree(spark, sf_dir, name: str):
     formatted-string / attribute-naming changes across Spark versions
     (ADVICE r07: string fragments like 'BroadcastHashJoin [term' are
     brittle CI)."""
-    root = QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
+    return _nodes(QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan())
+
+
+def _nodes(root):
+    """(simpleClassName, jvm_node) pairs of a physical plan's main tree;
+    subquery plans hang off expressions and are not walked."""
     out = []
     stack = [root]
     while stack:
@@ -91,31 +96,33 @@ def test_no_row_at_a_time_python_in_registered_queries(spark, sf_dir):
 
 
 def test_sweep_native_is_single_aggregation_over_preagg(spark, sf_dir):
-    """The native sweep must pre-aggregate to distinct tuples before the
-    Expand: exactly two HashAggregate pairs (pre-agg + cube), and the
-    Expand sits above the pre-aggregation, not the raw scan.
-
-    Built directly with an explicit total_count: the registered query
-    derives the threshold denominator from the persisted pre-aggregation
-    and pins its result (lineage truncated), so the returned DataFrame no
-    longer exposes the sweep plan — this path runs the identical builder
-    without the persist/pin."""
+    """The default native sweep is one lazy plan: the Expand consumes the
+    pre-aggregated tuple table (not the raw scan), the support threshold
+    is a scalar subquery in the post-cube Filter (no persist, no count
+    action, no pin), and AQE feeds that subquery from the pre-aggregate's
+    own shuffle via ReusedExchange, so the input is scanned once."""
     from app_insights_generator_spark.operators.sweep import sweep_grouping_sets
     from app_insights_generator_spark.queries.insights_queries import (
         LINEITEM_CFG,
         _lineitem_base,
     )
 
-    df = _lineitem_base(spark, sf_dir)
-    swept = sweep_grouping_sets(df, LINEITEM_CFG, total_count=df.count())
-    plan = swept._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" in plan
-    scan_pos = plan.find("FileScan")
-    expand_pos = plan.find("Expand")
-    agg_before_expand = plan.find("HashAggregate", expand_pos)
-    assert agg_before_expand != -1 and scan_pos > expand_pos, (
-        "Expand should consume the pre-aggregated tuple table"
-    )
+    swept = sweep_grouping_sets(_lineitem_base(spark, sf_dir), LINEITEM_CFG)
+    nodes = _nodes(swept._jdf.queryExecution().executedPlan())
+    expands = [n for cls, n in nodes if cls == "ExpandExec"]
+    assert len(expands) == 1
+    below = [cls for cls, _ in _nodes(expands[0])]
+    assert below[1] == "HashAggregateExec", below
+    scans = [cls for cls, _ in nodes if "Scan" in cls]
+    assert scans and [c for c in below if "Scan" in c] == scans
+    filters = [n.condition().toString() for cls, n in nodes if cls == "FilterExec"]
+    assert any("Subquery" in f for f in filters), filters
+
+    swept.collect()
+    final = swept._jdf.queryExecution().executedPlan().toString()
+    reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+    assert reused, final
+    assert all("hashpartitioning" in ln and "spark_grouping_id" not in ln for ln in reused)
 
 
 def test_q19_disjunction_split_and_pushed(spark, sf_dir):
